@@ -12,12 +12,14 @@ import org.apache.spark.sql.functions._
   * generalization that PRESERVES history as validity intervals — the
   * operator a reference user would need to time-travel attributes.
   *
-  * Scale: both operators are one-exchange shapes. [[buildType2]] shuffles
-  * once on the entity key and runs its three window passes over that same
-  * (key, ts) sort — Spark plans a single Sort under all of them.
-  * [[diff]] is a single full-outer sort-merge join on the key; with both
-  * snapshots bucketed at rest (sources/Store.writeBucketed) it runs with
-  * zero exchanges.
+  * Scale: [[buildType2]] shuffles once on the entity key and runs its
+  * three window passes over that same (key, ts) sort — Spark plans a
+  * single Sort under all of them. [[diff]] is a single full-outer
+  * equi-join of the two struct-packed snapshots on the key — a shuffled
+  * hash join while the older side's per-partition build is within
+  * budget, a sort-merge join (which spills) past it; with both snapshots
+  * bucketed at rest (sources/Store.writeBucketed) it runs with zero
+  * exchanges.
   */
 object Scd {
 
@@ -44,46 +46,72 @@ object Scd {
         col("ts_sec").as("valid_from"), col("valid_to"))
   }
 
+  /** Per-partition budget for the hash-join build of [[pairByKey]], in
+    * the planner's size estimate: the older side's `sizeInBytes` over
+    * the session's shuffle partitions. Spark's ShuffledHashJoin build
+    * has NO spill path (graft.Stress section 4 measured it failing with
+    * "not enough memory to build hash map"), so past the budget the
+    * pairing is left to the planner, which sort-merges two
+    * similar-sized sides and spills. The estimate reads compressed file
+    * sizes, so it runs low: graft.Stress section 7's ×16 snapshot
+    * estimates 12 MB per partition (4 partitions) for 1.8M rows per
+    * partition, over 80 MB as UnsafeRows alone; 4 MB of estimate keeps
+    * the resident build in the tens of MB. The store's CDC reads and
+    * q_table_diff estimate under 1 MB per partition at sf0.1. */
+  val HashBuildMaxPartitionBytes: Long = 4L * 1024 * 1024
+
+  /** The keyed pairing under [[diff]] and the store's cross-migration
+    * CDC read: `older`'s `bCols` packed into struct `_b`, `newer`'s
+    * `aCols` into `_a`, full-outer-joined on `key` — one row per key,
+    * a null struct on the side that lacks it. The join is hinted to a
+    * shuffled hash join (left to its own size checks the planner sees
+    * two similar-sized sides and sorts both) only while the older
+    * side's estimated build per partition is within
+    * `hashBuildMaxPartitionBytes`. */
+  private[graft] def pairByKey(older: DataFrame, bCols: Seq[String],
+      newer: DataFrame, aCols: Seq[String], key: String,
+      hashBuildMaxPartitionBytes: Long = HashBuildMaxPartitionBytes): DataFrame = {
+    val o = older.select(col(key), struct(bCols.map(col): _*).as("_b"))
+    val n = newer.select(col(key), struct(aCols.map(col): _*).as("_a"))
+    val parts = math.max(1, older.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "200").toInt)
+    val build = o.queryExecution.optimizedPlan.stats.sizeInBytes / parts
+    val side = if (build <= hashBuildMaxPartitionBytes) o.hint("shuffle_hash") else o
+    side.join(n, Seq(key), "full_outer")
+  }
+
   /** Classify rows between two snapshots of a keyed table: `added`
     * (key only in `newer`), `removed` (key only in `older`), `changed`
     * (key in both, any compared column differs). Unchanged keys are
     * dropped. `compare` lists the columns participating in change
     * detection; each appears in the output as before_<c> / after_<c>.
     *
-    * Plan shape: ONE exchange. Each side tags its compare columns into
-    * a struct, the tagged union folds per key (first non-null struct
-    * per side — exact under the keyed contract of ≤ 1 row per key per
-    * side), and presence = struct non-nullness classifies the change.
-    * The former full-outer join shuffled BOTH snapshots (two
-    * exchanges + a join); this moves the same bytes through one
-    * exchange and a hash aggregate — at scale a full network pass of
-    * one snapshot removed per diff (guide §2.4: operations keyed the
-    * same way share one exchange). NULL keys are one group here (SQL
-    * GROUP BY semantics); every gated caller keys on a non-null merge
-    * key, where the two forms are row-identical.
+    * Plan shape: each side packs its compare columns into ONE struct
+    * (`_b` older, `_a` newer), and a full-outer equi-join on the key
+    * pairs them ([[pairByKey]]); presence = struct non-nullness
+    * classifies the change. Within [[HashBuildMaxPartitionBytes]] the
+    * join is a shuffled hash join, which sorts neither side (a
+    * `first(struct)` fold over a tagged union cannot hash-aggregate and
+    * sorts both); past it, a sort-merge join. With both snapshots
+    * bucketed at rest (sources/Store.writeBucketed) it runs with zero
+    * exchanges.
+    *
+    * Keyed contract: ≤ 1 row per key per side — a repeated key pairs
+    * every older copy with every newer copy. NULL keys never match
+    * (equi-join semantics): a NULL-key row of `older` surfaces as
+    * `removed` and one of `newer` as `added`, each on its own row.
+    * Every gated caller keys on a non-null merge key.
     */
   def diff(older: DataFrame, newer: DataFrame, key: String,
       compare: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    def sideType(df: DataFrame) =
-      StructType(compare.map(c => df.schema(df.schema.fieldIndex(c))))
-    val o = older.select(col(key),
-      struct(compare.map(col): _*).as("_b"),
-      lit(null).cast(sideType(newer)).as("_a"))
-    val n = newer.select(col(key),
-      lit(null).cast(sideType(older)).as("_b"),
-      struct(compare.map(col): _*).as("_a"))
-    val folded = o.unionByName(n).groupBy(key)
-      .agg(first(col("_b"), ignoreNulls = true).as("_b"),
-        first(col("_a"), ignoreNulls = true).as("_a"))
     // change detection as ONE struct-level null-safe comparison: Spark
     // compares structs field-wise with null fields equal, so
-    // !(_b <=> _a) ⇔ the old per-column OR of !(before_c <=> after_c) —
+    // !(_b <=> _a) ⇔ the per-column OR of !(before_c <=> after_c) —
     // and, unlike that 2k-term OR over getFields, it gives the
     // optimizer's constraint propagation nothing to expand (the OR form
     // measured MINUTES of ExpressionSet planning on the chained cdc
     // appliers' deep plans)
-    folded
+    pairByKey(older, compare, newer, compare, key)
       .withColumn("change",
         when(col("_b").isNull, lit("added"))
           .when(col("_a").isNull, lit("removed"))

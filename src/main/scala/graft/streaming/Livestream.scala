@@ -206,7 +206,7 @@ object Livestream {
       clock: () => Long = () => System.currentTimeMillis(),
       dvAutoMaterialize: Option[Int] = None,
       autoCompact: Option[Int] = None) {
-    // The merge layer keys on Merge.KeyCol end-to-end (upsert window,
+    // The merge layer keys on Merge.KeyCol end-to-end (upsert fold,
     // keyBucket default, the maxFiles>1 compaction salt below): require
     // it at construction so a key-less schema fails HERE with a named
     // reason, not mid-optimize() with an AnalysisException. Matched
@@ -1462,22 +1462,10 @@ object Livestream {
         s"changes at $path: post-migration schema lost the merge key")
       val bCols = before.columns.filterNot(_.equalsIgnoreCase(key)).toSeq
       val aCols = after.columns.filterNot(_.equalsIgnoreCase(key)).toSeq
-      // one-exchange tagged-union fold (the Scd.diff device, asymmetric
-      // columns): each side packs its own generation's columns into a
-      // struct, the union folds per key, presence = struct non-nullness
-      // — the former full-outer join shuffled both generation reads
-      def sideType(df: org.apache.spark.sql.DataFrame, cs: Seq[String]) =
-        org.apache.spark.sql.types.StructType(
-          cs.map(c => df.schema(df.schema.fieldIndex(c))))
-      val b = before.select(col(key),
-        struct(bCols.map(col): _*).as("_b"),
-        lit(null).cast(sideType(after, aCols)).as("_a"))
-      val a = after.select(col(key),
-        lit(null).cast(sideType(before, bCols)).as("_b"),
-        struct(aCols.map(col): _*).as("_a"))
-      b.unionByName(a).groupBy(key)
-        .agg(first(col("_b"), ignoreNulls = true).as("_b"),
-          first(col("_a"), ignoreNulls = true).as("_a"))
+      // the Scd.diff pairing with asymmetric columns: each side packs
+      // its own generation's columns into a struct, presence = struct
+      // non-nullness
+      graft.operators.Scd.pairByKey(before, bCols, after, aCols, key)
         .withColumn("kind",
           when(col("_b").isNull, lit("insert"))
             .when(col("_a").isNull, lit("delete"))
@@ -1648,13 +1636,14 @@ object Livestream {
       *
       * @param storeEdits explicit CDC override; None (the default) follows
       *        the archive's persisted `store_edits` config.
-      * @return true iff a new version was published (a partitioned merge
-      *         of an empty batch publishes nothing and returns false) —
-      *         so sinks need no separate emptiness probe job. */
+      * @return true iff a new version was published (a merge of an
+      *         empty batch publishes nothing and returns false) — so
+      *         sinks need no separate emptiness probe job. */
     def merge(batch: DataFrame, seqCol: String,
         storeEdits: Option[Boolean] = None): Boolean = {
       validatePartitioning()
       val cdc = storeEdits.getOrElse(storeEditsEnabled)
+      val label = s"UpsertTable at $path"   // names the table in fold errors
       val next = currentVersion + 1
       guardStagedSchema(next)
       // SCHEMA EVOLUTION: the construction schema is the merge target.
@@ -1670,10 +1659,14 @@ object Livestream {
       val evolving = currentVersion >= 0 && schemaAt(currentVersion) != target
       partitioning match {
         case None =>
+          // empty batch: nothing to publish — a merge of zero rows would
+          // otherwise rewrite the whole flat table as a new version
+          if (batch.isEmpty) return false
           val existing = readFlat(currentVersion, target)
-          val r = Merge.upsert(existing, batch, entity, seqCol, storeEdits = cdc)
+          val r = Merge.upsert(existing, batch, entity, seqCol, storeEdits = cdc,
+            name = label)
           // With CDC on, table + edits are two actions over the same
-          // union+window stack — stage it once (bounded by existing+batch,
+          // union+exchange+fold — stage it once (bounded by existing+batch,
           // i.e. by what this merge reads anyway; spills, never OOMs).
           if (cdc) r.staged.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1689,7 +1682,7 @@ object Livestream {
 
         case Some(pexpr) =>
           // (Measured, not kept: persisting the batch for its two
-          // consumers here — touched aggregate + union/window upsert —
+          // consumers here — touched aggregate + union/fold upsert —
           // costs more than the second lineage evaluation it saves, both
           // locally and in principle: the batch is micro-batch-sized and
           // its lineage is a scan+projection, while persist adds a cache
@@ -1714,24 +1707,25 @@ object Livestream {
           val existing = readParts(prev.view.filterKeys(touched).toMap, target)
           // ONE-exchange publish (the default, outputPartitions ≤ 1):
           // materialize pt on BOTH inputs and hand it to the upsert as
-          // the cluster column — the union pre-partitions on pt, the
-          // merge fold windows over (pt, key) on that same exchange
+          // the cluster column — the union exchanges on pt, the merge
+          // fold runs over (pt, key) runs of that same exchange
           // (key-stable partition value ⇒ pt is constant within each key
           // group: the identical invariant `touched`-from-the-batch and
           // the pruned read above already rely on), and the merged
-          // output leaves the window ALREADY aligned one-task-per-bucket
+          // output leaves the fold ALREADY aligned one-task-per-bucket
           // for the partitioned write — the separate alignToBuckets
           // exchange per publish disappears. The salted multi-file form
           // (outputPartitions > 1) keeps the post-merge alignment: its
-          // (pt, salt) distribution cannot ride the window's clustering.
+          // (pt, salt) distribution cannot ride the fold's clustering.
           val fused = outputPartitions.forall(_ <= 1)
           val r =
             if (fused) Merge.upsert(
               existing.withColumn(PartCol, ptCol(pexpr)),
               b.withColumn(PartCol, ptCol(pexpr)),
               entity.copy(frozen = entity.frozen :+ PartCol), seqCol,
-              storeEdits = cdc, clusterCol = Some(PartCol))
-            else Merge.upsert(existing, b, entity, seqCol, storeEdits = cdc)
+              storeEdits = cdc, clusterCol = Some(PartCol), name = label)
+            else Merge.upsert(existing, b, entity, seqCol, storeEdits = cdc,
+              name = label)
           // Same two-consumer staging as the flat branch, bounded here by
           // the TOUCHED partitions + batch — the pruned merge's working set.
           if (cdc) r.staged.persist(
@@ -1814,20 +1808,19 @@ object Livestream {
           merge(batch, seqCol, storeEdits)
       }
 
-    /** Whether this table uses the partition-pruned layout — sinks use
-      * it to skip the per-batch emptiness probe (a partitioned [[merge]]
-      * already derives the touched set from the batch and publishes
-      * nothing when it is empty). */
-    private[streaming] def isPartitionedLayout: Boolean = partitioning.isDefined
-
     /** Bulk initial load: publish `df` as version 0 WITHOUT the upsert
-      * machinery (no union+window, no CDC — there is nothing to merge
+      * machinery (no union+fold, no CDC — there is nothing to merge
       * against). The bootstrap analog of the reference creating a fresh
       * database and inserting the first fetch wholesale; at scale this is
       * the "backfill then stream" pattern — pay a plain partitioned write
       * for the backfill, reserve the merge for increments. Keys must be
-      * unique in `df` (first-load contract; the next merge enforces the
-      * usual precedence for any later duplicates). */
+      * unique in `df` (first-load contract). Seed does not check it;
+      * [[Merge.upsert]]'s fold does, failing the merge with the table
+      * and the key named. The merge folds every existing row it reads,
+      * so on a flat table EVERY later merge fails, whatever keys its
+      * batch holds; on a partitioned table every merge touching the
+      * duplicate's bucket fails. Repair: [[purgeKeys]] the key (it
+      * drops every copy), then merge the wanted row back. */
     def seed(df: DataFrame): Unit = {
       require(currentVersion < 0,
         s"UpsertTable at $path already has published versions; use merge()")
@@ -2180,20 +2173,13 @@ object Livestream {
         val seqd = batch.withColumn("_seq",
           lit(batchId) * 1000000000L + monotonically_increasing_id()).persist()
         // no-data micro-batches (noDataMicroBatches, restart replays of
-        // fully-consumed sources) must not publish a new version — for a
-        // flat table a merge of zero rows would rewrite the whole table.
-        // A PARTITIONED table needs no separate emptiness probe job: its
-        // merge derives the touched set from the batch anyway and
-        // publishes nothing when it is empty — merge's return value is
-        // the probe, one job per trigger saved on every non-empty batch.
+        // fully-consumed sources) publish no new version: merge returns
+        // false on an empty batch, so its return value is the probe.
         try {
           // mergeReplay: a restart's replay self-recovers its own
           // crashed attempt's orphan claim (the checkpointed sink is
           // the single intended writer — see the writer contract)
-          val published =
-            if (table.isPartitionedLayout) table.mergeReplay(seqd, "_seq")
-            else !seqd.isEmpty && table.mergeReplay(seqd, "_seq")
-          if (published) {
+          if (table.mergeReplay(seqd, "_seq")) {
             // post-publish sidecar refresh: a streamed store keeps its
             // file skipping current without operator action. Incremental
             // by construction (refreshZoneMap stats only files not yet

@@ -72,13 +72,8 @@ object StreamNb {
       .withColumn("_seq",
         lit(seqBase) * 1000000000L + monotonically_increasing_id())
       .persist()
-    try {
-      // partitioned layout: merge's own touched-set probe covers the
-      // empty batch — no separate isEmpty job per ingest
-      if (table.isPartitionedLayout || !rows.isEmpty) {
-        table.mergeReplay(rows, "_seq", storeEdits = Some(false)); ()
-      }
-    } finally rows.unpersist()
+    try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
+    finally rows.unpersist()
   }
 
   /** Batch-shaped ingest: fold one ALREADY-ADMITTED document batch's

@@ -160,13 +160,8 @@ object StreamTopK {
         val rows = batch.withColumn("_seq",
           lit(batchId) * 1000000000L + monotonically_increasing_id())
           .persist()
-        try {
-          // partitioned layout: merge's own touched-set probe covers the
-          // empty batch — no separate per-trigger isEmpty job
-          if (table.isPartitionedLayout || !rows.isEmpty) {
-            table.mergeReplay(rows, "_seq", storeEdits = Some(false)); ()
-          }
-        } finally rows.unpersist()
+        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
+        finally rows.unpersist()
         refresh(batch.sparkSession, table, root, group, key, measure, k,
           mCol, rkCol)
       }

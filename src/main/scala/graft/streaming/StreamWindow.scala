@@ -152,13 +152,8 @@ object StreamWindow {
         val rows = batch.withColumn("_seq",
           lit(batchId) * 1000000000L + monotonically_increasing_id())
           .persist()
-        try {
-          // partitioned layout: merge's own touched-set probe covers the
-          // empty batch — no separate per-trigger isEmpty job
-          if (table.isPartitionedLayout || !rows.isEmpty) {
-            table.mergeReplay(rows, "_seq", storeEdits = Some(false)); ()
-          }
-        } finally rows.unpersist()
+        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
+        finally rows.unpersist()
         refresh(batch.sparkSession, table, root, groups, measure, tsCol,
           windowSec, slideSec, wCol, nCol, sCol)
       }

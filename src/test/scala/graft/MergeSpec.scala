@@ -213,20 +213,110 @@ class MergeSpec extends AnyFunSuite {
     assert(d.filter($"idstr" === "t1_a").head().getAs[String]("body") === "v2")
   }
 
-  test("upsert plans exactly ONE data exchange: stacked windows share the idstr sort") {
+  test("upsert plans ONE data exchange, ONE sort and no window: a single pass per key run") {
     // the engine's headline merge shape (SCALE.md row 1): union → one
-    // Exchange hashpartitioning(idstr) → one Sort → three Window nodes on
-    // top of it. A full-outer-join formulation would shuffle both sides;
-    // a regression that re-partitions between the windows would show up
-    // as a second exchange here.
+    // Exchange hashpartitioning(idstr) → one Sort → the linear fold. A
+    // full-outer-join formulation would shuffle both sides; a regression
+    // to stacked window functions or a second exchange shows up here.
     val ex = comments(("t1_a", 1L, "alice", "v1", 1L, null))
     val in = withSeq(comments(("t1_a", 2L, "alice", "v2", 2L, null),
       ("t1_b", 3L, "bob", "x", 1L, null)))
-    val plan = Merge.upsert(ex, in, Merge.comments, "_seq", now)
-      .table.queryExecution.executedPlan.toString
-    val exchanges = plan.split("Exchange hashpartitioning").length - 1
-    assert(exchanges === 1, s"expected exactly one hash exchange:\n$plan")
-    assert(plan.split("\\bSort\\b").length - 1 >= 1)
-    assert(plan.split("Window").length - 1 >= 3, "the three stacked windows")
+    val r = Merge.upsert(ex, in, Merge.comments, "_seq", now)
+    for (df <- Seq(r.table, r.edits)) {
+      val plan = df.queryExecution.executedPlan.toString
+      val exchanges = plan.split("Exchange hashpartitioning").length - 1
+      assert(exchanges === 1, s"expected exactly one hash exchange:\n$plan")
+      assert(plan.split("\\bSort\\b").length - 1 === 1, s"one sort:\n$plan")
+      assert(!plan.contains("Window"), s"no window operator:\n$plan")
+    }
+  }
+
+  test("existing side with a repeated key fails loudly, naming the table and the key") {
+    val ex = comments(("t1_a", 1L, "alice", "v0", 1L, null),
+      ("t1_a", 2L, "alice", "v0b", 2L, null),
+      ("t1_b", 3L, "bob", "x", 1L, null))
+    val in = withSeq(comments(("t1_b", 4L, "bob", "y", 2L, null)))
+    val r = Merge.upsert(ex, in, Merge.comments, "_seq", now, name = "tbl_dup")
+    val e = intercept[Exception](r.table.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("key 't1_a' has 2 rows in tbl_dup"), msgs)
+  }
+
+  /** Sequential replay of the reference's upsert rules (tsdb.py:389-509,
+    * 527-545, 303-324): rows applied one at a time in `_seq` order —
+    * INSERT when the key is absent, else coalesce(new, old) per updatable
+    * column, frozen columns untouched, and new text stored unless it is
+    * null or a tombstone; a stored-text change archives the old text.
+    * Row = (idstr, created, author, body, score, distinguish, textlen). */
+  private type CRow = (String, Long, String, String, java.lang.Long, String, java.lang.Long)
+
+  private def replay(existing: Seq[CRow], incoming: Seq[(CRow, Long, Option[Long])],
+      nowEpoch: Long): (Map[String, CRow], Seq[(String, String, Long)]) = {
+    def tomb(author: String, text: String) =
+      (author == null || author == "[DELETED]") && Set("[removed]", "[deleted]")(text) ||
+        text.contains("has been overwritten") || text.contains("pastebin.com/64GuVi2F")
+    val table = scala.collection.mutable.Map(existing.map(r => r._1 -> r): _*)
+    val edits = Seq.newBuilder[(String, String, Long)]
+    for ((r, _, edited) <- incoming.sortBy(_._2)) table.get(r._1) match {
+      case None => table(r._1) = r
+      case Some(old) =>
+        val keep = r._4 == null || tomb(r._3, r._4)
+        if (!keep && r._4 != old._4) edits += ((r._1, old._4, edited.getOrElse(nowEpoch)))
+        table(r._1) = old.copy(_4 = if (keep) old._4 else r._4,
+          _5 = if (r._5 != null) r._5 else old._5,
+          _6 = if (r._6 != null) r._6 else old._6)
+    }
+    (table.toMap, edits.result())
+  }
+
+  test("property: the one-pass fold equals a sequential replay of the upsert rules") {
+    // key runs of 3+ rows, tombstone chains (null / [DELETED] author with
+    // [deleted] / [removed] text — and a lower-case [deleted] author,
+    // which is not the tombstone sentinel), null texts, null updatable
+    // columns, and `_edited` present (some null) and absent
+    val rng = new scala.util.Random(20261018)
+    def pick[T](xs: T*): T = xs(rng.nextInt(xs.length))
+    def row(id: Int): CRow = {
+      val author = pick("alice", "bob", null, "[DELETED]", "[deleted]")
+      val body = pick("a", "b", "c", null, "[deleted]", "[removed]",
+        "this has been overwritten", "see pastebin.com/64GuVi2F")
+      (s"t1_$id", rng.nextInt(50).toLong, author, body,
+        if (rng.nextInt(3) == 0) null else java.lang.Long.valueOf(rng.nextInt(100)),
+        pick(null, null, "mod", "admin"),
+        if (body == null) null else java.lang.Long.valueOf(body.length))
+    }
+    val cCols = Seq("idstr", "created", "author", "body", "score", "distinguish", "textlen")
+    def shape(df: DataFrame, extra: String*) =
+      df.select(Seq($"created".as("idint"), $"idstr", $"created", $"author",
+        lit("t3_root").as("parent"), lit("t3_root").as("submission"),
+        $"body", $"score", lit("test").as("subreddit"), $"distinguish", $"textlen") ++
+        extra.map(col): _*)
+    for (trial <- 1 to 6; withEdited <- Seq(true, false)) {
+      val nKeys = 12
+      val existing = (0 until nKeys).filter(_ => rng.nextInt(3) > 0).map(row)
+      // 0..5 incoming rows per key: most runs carry 3+ rows with the existing one
+      val seqs = rng.shuffle((0 until 200).toList).iterator
+      val incoming = (0 until nKeys).flatMap(id => Seq.fill(rng.nextInt(6))(row(id)))
+        .map(r => (r, seqs.next().toLong,
+          if (withEdited && rng.nextBoolean()) Some(1000L + rng.nextInt(9)) else None))
+      val inDF = shape(incoming.map { case (r, sq, ed) =>
+          (r._1, r._2, r._3, r._4, r._5, r._6, r._7, sq, ed) }
+        .toDF(cCols :+ "_seq" :+ "_edited": _*),
+        (if (withEdited) Seq("_seq", "_edited") else Seq("_seq")): _*)
+      val r = Merge.upsert(shape(existing.toDF(cCols: _*)), inDF, Merge.comments,
+        "_seq", now)
+      val (wantTable, wantEdits) = replay(existing, incoming, 9999L)
+      val gotTable = r.table.collect().map(x => x.getAs[String]("idstr") ->
+        ((x.getAs[String]("idstr"), x.getAs[Long]("created"), x.getAs[String]("author"),
+          x.getAs[String]("body"), x.getAs[java.lang.Long]("score"),
+          x.getAs[String]("distinguish"), x.getAs[java.lang.Long]("textlen")))).toMap
+      assert(gotTable === wantTable, s"trial $trial edited=$withEdited: table")
+      val gotEdits = r.edits.collect().map(x => (x.getString(0), x.getString(1), x.getLong(2)))
+        .toSeq.sortBy(_.toString)
+      assert(gotEdits === wantEdits.sortBy(_.toString),
+        s"trial $trial edited=$withEdited: edits")
+      assert(incoming.groupBy(_._1._1).values.exists(_.length >= 3), "3+ row runs")
+    }
   }
 }

@@ -111,6 +111,67 @@ class ScdSpec extends AnyFunSuite {
     assert(got === Map(2L -> "changed", 3L -> "changed"))
   }
 
+  test("diff: hash-joined within the build budget, sort-merged past it, no sort aggregate, ONE struct <=>; same classification as the tagged-union fold on random snapshot pairs") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, Or}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.types.StructType
+    // the tagged-union first(struct) fold diff() was before the join
+    def foldDiff(older: DataFrame, newer: DataFrame, key: String,
+        compare: Seq[String]): DataFrame = {
+      def sideType(df: DataFrame) =
+        StructType(compare.map(c => df.schema(df.schema.fieldIndex(c))))
+      val o = older.select(col(key), struct(compare.map(col): _*).as("_b"),
+        lit(null).cast(sideType(newer)).as("_a"))
+      val n = newer.select(col(key), lit(null).cast(sideType(older)).as("_b"),
+        struct(compare.map(col): _*).as("_a"))
+      o.unionByName(n).groupBy(key)
+        .agg(first(col("_b"), ignoreNulls = true).as("_b"),
+          first(col("_a"), ignoreNulls = true).as("_a"))
+        .withColumn("change",
+          when(col("_b").isNull, lit("added"))
+            .when(col("_a").isNull, lit("removed"))
+            .when(!(col("_b") <=> col("_a")), lit("changed")))
+        .filter(col("change").isNotNull)
+        .select(col(key) +:
+          (compare.map(c => col("_b").getField(c).as(s"before_$c")) ++
+            compare.map(c => col("_a").getField(c).as(s"after_$c")) :+
+            col("change")): _*)
+    }
+    val rng = new scala.util.Random(77)
+    def snapshot(keys: Seq[Long]) = keys.filter(_ => rng.nextInt(4) > 0).map(k =>
+      (k, if (rng.nextInt(4) == 0) None else Some(rng.nextInt(3).toLong),
+        if (rng.nextInt(5) == 0) null else Seq("O", "F")(rng.nextInt(2))))
+      .toDF("k", "price_c", "status")
+    for (trial <- 1 to 8) {
+      val older = snapshot(0L until 30L)
+      val newer = snapshot(0L until 30L)
+      val cmp = Seq("price_c", "status")
+      val got = Scd.diff(older, newer, "k", cmp)
+      val want = foldDiff(older, newer, "k", cmp)
+      assert(got.collect().map(_.toString).sorted ===
+        want.collect().map(_.toString).sorted, s"trial $trial")
+      val plan = got.queryExecution.executedPlan
+      assert(plan.collect { case a: SortAggregateExec => a }.isEmpty, plan.toString)
+      assert(plan.toString.contains("ShuffledHashJoin"), plan.toString)
+      val conds = got.queryExecution.optimizedPlan.flatMap(_.expressions)
+      val nullSafe = conds.flatMap(_.collect { case e: EqualNullSafe => e })
+      assert(nullSafe.nonEmpty &&
+        nullSafe.forall(_.left.dataType.isInstanceOf[StructType]), nullSafe.toString)
+      assert(conds.forall(_.find(_.isInstanceOf[Or]).isEmpty), "no per-column OR")
+      // past the build budget the pairing is the planner's spillable
+      // sort-merge join, pairing the same rows
+      def pairs(budget: Long) = Scd.pairByKey(older, cmp, newer, cmp, "k", budget)
+      val merged = pairs(-1L)
+      assert(merged.collect().map(_.toString).sorted ===
+        pairs(Scd.HashBuildMaxPartitionBytes).collect().map(_.toString).sorted,
+        s"trial $trial (sort-merge)")
+      val mPlan = merged.queryExecution.executedPlan.toString
+      assert(mPlan.contains("SortMergeJoin") && !mPlan.contains("ShuffledHashJoin"),
+        mPlan)
+    }
+  }
+
   test("PIT composition: each fact matches the dim version valid at its timestamp") {
     import graft.operators.TemporalJoin
     // user 1: attr a@10 -> b@30 -> c@50; facts at 10, 29, 30, 49, 99

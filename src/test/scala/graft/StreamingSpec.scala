@@ -3118,4 +3118,74 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     table.unregisterBasis(root)
     assert(!table.registeredBases.contains(root))
   }
+
+  test("flat merge of an empty batch returns false and publishes no version") {
+    val table = new Livestream.UpsertTable(spark, tmp("flatEmpty"),
+      Merge.comments, Seq.empty[C].toDF())
+    assert(table.merge(Seq(c(1, "a", 1)).toDF().withColumn("_seq", lit(0L)), "_seq"))
+    val v = table.currentVersion
+    assert(!table.merge(Seq.empty[C].toDF().withColumn("_seq", lit(0L)), "_seq"))
+    assert(table.currentVersion === v)
+  }
+
+  test("StreamAnn.encodeSink on a FLAT table: an AvailableNow trigger that encodes no rows publishes nothing") {
+    import graft.streaming.StreamAnn
+    val coarse: IndexedSeq[IndexedSeq[Double]] =
+      IndexedSeq(IndexedSeq(1.0, 0.0), IndexedSeq(0.0, 1.0))
+    val cbRes: IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+      IndexedSeq(IndexedSeq(IndexedSeq(0.0), IndexedSeq(0.1)),
+        IndexedSeq(IndexedSeq(0.0), IndexedSeq(0.1)))
+    val table = new Livestream.UpsertTable(spark, tmp("annFlat"), StreamAnn.annEntity,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StreamAnn.annSchema))
+    val src = tmp("annFlatSrc"); val ckp = tmp("annFlatCkp")
+    def trigger(rows: Seq[VecRow], part: String): Unit = {
+      rows.toDF().write.parquet(s"$src/$part")
+      StreamAnn.encodeSink(
+          spark.readStream.schema(Seq.empty[VecRow].toDF().schema)
+            .option("recursiveFileLookup", "true").parquet(src),
+          "vec_id", "embedding", coarse, cbRes, table, ckp, Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    trigger(Seq(VecRow(1, Array(2.0, 0.1))), "a")
+    assert(table.currentVersion === 0L)
+    // a zero vector has no direction: the trigger has a source row but
+    // encodes none — the flat table must not be rewritten as a version
+    trigger(Seq(VecRow(2, Array(0.0, 0.0))), "b")
+    assert(table.currentVersion === 0L)
+    assert(StreamAnn.codes(table).count() === 1)
+  }
+
+  test("a seeded duplicate key fails later merges, naming table and key; purgeKeys repairs it") {
+    def failure(table: Livestream.UpsertTable, batch: Seq[C]): String = {
+      val e = intercept[Exception](
+        table.merge(batch.toDF().withColumn("_seq", lit(0L)), "_seq"))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+    }
+    for (part <- Seq(None, Some(Livestream.keyBucket(nBuckets = 4)))) {
+      val dir = tmp("dupKey")
+      val table = new Livestream.UpsertTable(spark, dir, Merge.comments,
+        Seq.empty[C].toDF(), partitioning = part)
+      table.seed(Seq(c(1, "a", 1), c(1, "b", 2), c(2, "x", 3)).toDF())
+      val named = s"key 't1_1' has 2 rows in UpsertTable at $dir"
+      val msgs = failure(table, Seq(c(1, "z", 4)))
+      assert(msgs.contains(named), msgs)
+      // a flat merge folds the whole table: a batch that never names
+      // the duplicated key fails all the same
+      if (part.isEmpty) {
+        val other = failure(table, Seq(c(2, "y", 5)))
+        assert(other.contains(named), other)
+      }
+      assert(table.currentVersion === 0L, s"partitioning $part")
+      // the repair path: purging the key drops every copy, and the
+      // next merge of it publishes
+      assert(table.purgeKeys(Seq("t1_1").toDF("idstr")) === 2L)
+      assert(table.merge(Seq(c(1, "z", 4)).toDF().withColumn("_seq", lit(0L)),
+        "_seq"), s"partitioning $part")
+      assert(table.current.filter(col("idstr") === "t1_1")
+        .select("body").as[String].collect().toSeq === Seq("z"),
+        s"partitioning $part")
+    }
+  }
 }
