@@ -525,11 +525,11 @@ object PipelineQueries {
     *    maintained counts ≡ batch counts is q_langid_incremental's
     *    proven gate, so the serving profiles are the batch trainer's).
     *  - PHASE 2 (corpus): the WHOLE planted corpus streams in 4 real
-    *    micro-batches through a composite foreachBatch sink that per
-    *    batch (a) ROUTES against the final phase-1 profiles (training
-    *    precedes routing in the batch plan too — scores are
-    *    functionals of the FINAL model, which is why tertiles stay a
-    *    serve-time device), (b) MIN-FOLDS the routed batch into the
+    *    micro-batches through a composite [[Livestream.maintain]]
+    *    sink that per batch (a) ROUTES against the final phase-1
+    *    profiles (training precedes routing in the batch plan too —
+    *    scores are functionals of the FINAL model, which is why
+    *    tertiles stay a serve-time device), (b) MIN-FOLDS the routed batch into the
     *    deduped-corpus store keyed `lang:md5(text)` — the fold is
     *    commutative, so admission is ORDER-INDEPENDENT and converges
     *    to batch dedup's min-doc_id survivor regardless of micro-batch
@@ -579,10 +579,9 @@ object PipelineQueries {
       planted.repartition(4).write.parquet(src)
       val stream = s.readStream.schema(planted.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckp").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val q = Livestream.maintain(stream, dedup, tmp.resolve("ckp").toString,
+          org.apache.spark.sql.streaming.Trigger.AvailableNow(), Some(false)) {
+        (batch, batchId) =>
           val profiles = graft.streaming.StreamLangid
             .profiles(langidTable, 64).localCheckpoint(false)
           val routed = TextAnalysis.langidByProfiles(batch, "doc_id",
@@ -605,22 +604,15 @@ object PipelineQueries {
           if (!fresh.isEmpty)
             graft.streaming.StreamNb.ingest(lm, fresh, "idstr", "text",
               "lang_pred", seqBase = batchId)
-          val rows = cand.join(cur, Seq("idstr"), "left")
+          cand.join(cur, Seq("idstr"), "left")
             .select(col("idstr"),
               lit(null).cast("string").as("author"),
               lit(null).cast("string").as("body"),
               least(col("doc_id"),
                 coalesce(col("_doc0"), col("doc_id"))).as("doc_id"),
               col("lang_pred"), col("text"))
-            .withColumn("_seq",
-              lit(batchId) * 1000000000L + monotonically_increasing_id())
-            .persist()
-          // partitioned layout: merge's own touched-set probe covers
-          // the empty batch — no separate per-trigger isEmpty job
-          try { dedup.merge(rows, "_seq", storeEdits = Some(false)); () }
-          finally rows.unpersist()
-        }
-        .start()
+      }(_ => ())
+      .start()
       q.awaitTermination()
       (dedup, lm)
     })

@@ -417,13 +417,20 @@ object Events {
     * Each user's events order by (ts, tiebreak); length-n windows
     * shingle per user row-locally after ONE key shuffle; path counts
     * are a shingle-bounded aggregate and the top-k is a TakeOrdered.
+    *
+    * Event types must be non-null: a null type fails the query with an
+    * error naming `eventPaths` (a row-level `raise_error` on the type
+    * projection the query already runs — no extra job) instead of
+    * joining into a path as "".
     */
   def eventPaths(events: DataFrame, user: String, tsSec: Column,
       tieBreak: Column, typ: Column, n: Int, k: Int): DataFrame = {
     require(n >= 2 && k >= 1)
     val seqs = events
       .select(col(user).as("u"), tsSec.as("t"), tieBreak.as("tb"),
-        typ.as("y"))
+        when(typ.isNull, raise_error(lit(
+          "eventPaths: null event type (event types must be non-null)")))
+          .otherwise(typ).as("y"))
       .groupBy("u")
       .agg(array_sort(collect_list(struct(col("t"), col("tb"), col("y"))))
         .as("evs"))
@@ -431,9 +438,9 @@ object Events {
       .filter(size(col("ys")) >= n)
     // length-n windows as ONE native n-gram pass (" -> "-joined) per
     // user row — the transform/sequence/array_join HOF was interpreted
-    // per window with a slice copy each (guide §4.1). Identical paths
-    // (event types are non-null by the caller's schema; a null type
-    // would join as "" here where array_join skipped it).
+    // per window with a slice copy each (guide §4.1). Identical paths:
+    // the types are non-null (checked above), so no window can hold a
+    // null that would join as "".
     seqs
       .select(explode(graft.functions.wordNgrams(col("ys"), n, " -> "))
         .as("path"))

@@ -42,8 +42,9 @@ object Linalg {
     *  - `(i, j, Σ qᵢ·qⱼ)` for 0 ≤ i ≤ j < d — the upper Gram triangle.
     * Rows whose vector is null or not length d are counted separately
     * as `(-2, -2, count)` and excluded from every statistic (loud, not
-    * silent). Per-task accumulation is a single long array; overflow
-    * headroom is 2⁶³ / 127² ≈ 5.7 · 10¹⁴ rows per task. */
+    * silent). An input with no rows yields no rows. Per-task
+    * accumulation is a single long array; overflow headroom is
+    * 2⁶³ / 127² ≈ 5.7 · 10¹⁴ rows per task. */
   def momentStats(df: DataFrame, vec: String, d: Int): DataFrame = {
     import df.sparkSession.implicits._
     val cells = d * (d + 1) / 2
@@ -68,14 +69,19 @@ object Linalg {
             }
           }
         }
-        val head = Iterator((-1, -1, n)) ++
-          (if (bad > 0) Iterator((-2, -2, bad)) else Iterator.empty)
-        val sumRows = Iterator.range(0, d).map(i => (i, -1, sums(i)))
-        var k = -1
-        val gramRows = for {
-          i <- Iterator.range(0, d); j <- Iterator.range(i, d)
-        } yield { k += 1; (i, j, upper(k)) }
-        head ++ sumRows ++ gramRows
+        // an empty partition contributes nothing, so an empty input has
+        // no rows and the maintained sink publishes no version for it
+        if (n == 0 && bad == 0) Iterator.empty
+        else {
+          val head = Iterator((-1, -1, n)) ++
+            (if (bad > 0) Iterator((-2, -2, bad)) else Iterator.empty)
+          val sumRows = Iterator.range(0, d).map(i => (i, -1, sums(i)))
+          var k = -1
+          val gramRows = for {
+            i <- Iterator.range(0, d); j <- Iterator.range(i, d)
+          } yield { k += 1; (i, j, upper(k)) }
+          head ++ sumRows ++ gramRows
+        }
       }
       .toDF("i", "j", "s")
       .groupBy("i", "j").agg(sum("s").as("s"))
@@ -228,7 +234,7 @@ object Linalg {
   def pcaFit(df: DataFrame, vec: String, d: Int): PcaModel = {
     val rows = momentStats(df, vec, d).collect()
     val stat = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val n = stat((-1, -1))
+    val n = stat.getOrElse((-1, -1), 0L)
     require(n > 0, "pcaFit: empty corpus")
     val sums = Array.tabulate(d)(i => stat((i, -1)))
     val nD = n.toDouble

@@ -200,7 +200,7 @@ object Livestream {
     *        cost when nothing is oversized: one driver-side directory
     *        listing per live bucket — metadata, no Spark job. None
     *        (default) = explicit optimize() only. */
-  final class UpsertTable(spark: SparkSession, path: String, entity: Merge.Entity,
+  final class UpsertTable(spark: SparkSession, path: String, val entity: Merge.Entity,
       emptyLike: DataFrame, outputPartitions: Option[Int] = None,
       partitioning: Option[Column] = None,
       clock: () => Long = () => System.currentTimeMillis(),
@@ -2127,26 +2127,124 @@ object Livestream {
     ((h % nBuckets) + nBuckets) % nBuckets
   }
 
-  /** Wire a streaming DataFrame into the upsert table. Each micro-batch
-    * gets a `_seq` from (batchId, `monotonically_increasing_id`) so
-    * within-batch precedence survives (dummy-then-live,
-    * pushshift.py:224-243).
+  /** ONE sink body for every stream-maintained artifact: the archive's
+    * own [[upsertSink]] and every derived-artifact sink (postings,
+    * assignments, counters, views...). Per trigger:
+    * `encode(batch, batchId)` → [[publish]] (stamp `_seq`, persist,
+    * [[UpsertTable.mergeReplay]], unpersist) → `after(published)`.
+    * Each artifact keeps only its encode and, where it has one, its
+    * after-hook.
     *
     * ==`_seq` semantics for a key appearing twice in ONE micro-batch==
     *
-    * `_seq` is only ever COMPARED within a single merge (the existing
-    * table enters at −1; the batchId term is constant across the batch),
-    * so its contract is purely within-batch: the duplicate with the
-    * larger `monotonically_increasing_id` wins, i.e. (partition index,
-    * row-offset-in-partition) scan order. For a single-split micro-batch
-    * (MemoryStream, trigger-capped file sources) that IS input order —
-    * last occurrence wins, the reference's sequential-apply semantics
-    * (pinned in StreamingSpec). Across partitions it is Spark's split
-    * ordering, which tracks file listing order but is not a contractual
-    * file order — a source that can repeat a key within one multi-split
-    * batch and cares which copy wins should carry its OWN sequence
-    * column and call `table.merge(batch, thatCol)` directly. Every
-    * current caller emits unique keys per batch and is unaffected.
+    * Each encoded row gets `_seq` = batchId · 10⁹ +
+    * `monotonically_increasing_id`, so within-batch precedence survives
+    * (dummy-then-live, pushshift.py:224-243). `_seq` is only ever
+    * COMPARED within a single merge (the existing table enters at −1;
+    * the batchId term is constant across the batch), so its contract is
+    * purely within-batch: the duplicate with the larger
+    * `monotonically_increasing_id` wins, i.e. (partition index,
+    * row-offset-in-partition) scan order. For a single-split
+    * micro-batch (MemoryStream, trigger-capped file sources) that IS
+    * input order — last occurrence wins, the reference's
+    * sequential-apply semantics (pinned in StreamingSpec). Across
+    * partitions it is Spark's split ordering, which tracks file listing
+    * order but is not a contractual file order — a source that can
+    * repeat a key within one multi-split batch and cares which copy wins
+    * should carry its OWN sequence column and call
+    * `table.merge(batch, thatCol)` directly. Every current caller emits
+    * unique keys per batch and is unaffected.
+    *
+    * ==Empty triggers==
+    * No-data micro-batches (noDataMicroBatches, restart replays of
+    * fully-consumed sources) and encodes that yield no rows publish no
+    * version, on flat and partitioned tables alike: merge returns false
+    * on an empty batch, so its return value is the probe and no sink
+    * runs a separate emptiness job. `after` still runs, with false —
+    * a view sink catches up there on every trigger (its refresh is a
+    * no-op at `basis == current`).
+    *
+    * ==Publish, then sidecars==
+    * `after` runs once the merge has returned. Whatever it refreshes is
+    * advisory (uncovered files always read), so a crash between the
+    * publish and the refresh costs coverage, not answers.
+    *
+    * Crash replay: a restart's replay self-recovers its own crashed
+    * attempt's orphan claim through `mergeReplay` (the checkpointed
+    * sink is the table's single intended writer — see the writer
+    * contract).
+    *
+    * @param storeEdits the merge's CDC override; None follows the
+    *        table's `store_edits` config, derived artifacts pass
+    *        `Some(false)`. */
+  def maintain(stream: DataFrame, table: UpsertTable, checkpoint: String,
+      trigger: Trigger, storeEdits: Option[Boolean])(
+      encode: (DataFrame, Long) => DataFrame)(
+      after: Boolean => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        after(publish(table, encode(batch, batchId), batchId, storeEdits))
+      }
+
+  /** The non-streaming half of [[maintain]], for callers that publish
+    * inside their own sink's trigger: stamp `rows` with the `_seq` of
+    * trigger `seqBase`, persist, [[UpsertTable.mergeReplay]], unpersist.
+    * The merge reads the rows more than once (its emptiness or
+    * touched-set probe, the fold, the CDC write), so caching scans the
+    * source once per trigger and keeps observed metrics counted once; a
+    * micro-batch is bounded by the trigger cap, so the cache is small by
+    * contract.
+    *
+    * @return true iff a new version was published. */
+  def publish(table: UpsertTable, rows: DataFrame, seqBase: Long,
+      storeEdits: Option[Boolean]): Boolean = {
+    val seqd = rows.withColumn("_seq",
+      lit(seqBase) * 1000000000L + monotonically_increasing_id()).persist()
+    try table.mergeReplay(seqd, "_seq", storeEdits)
+    finally seqd.unpersist()
+  }
+
+  /** The counter read-modify-write, written once for every counter
+    * table: fold a delta (`k`, `<c>_d` per updatable column `c`) into
+    * the table's current values → replacement rows (key, null frozen and
+    * text columns, `combine(coalesce(<c>_0, 0), <c>_d)`). Left join: an
+    * unseen key starts from zero. `combine` is `+` for additive counts;
+    * HLL registers pass `greatest`, Bloom words a bitwise OR. */
+  def foldCounters(table: UpsertTable, delta: DataFrame,
+      combine: (Column, Column) => Column = _ + _): DataFrame = {
+    val cs = table.entity.updatable
+    val cur = table.current.select(col(Merge.KeyCol).as("k") +:
+      cs.map(c => col(c).as(s"${c}_0")): _*)
+    val nulls = (table.entity.frozen :+ table.entity.textCol)
+      .map(lit(null).cast("string").as(_))
+    val folded = cs.map(c =>
+      combine(coalesce(col(s"${c}_0"), lit(0L)), col(s"${c}_d")).as(c))
+    delta.join(cur, Seq("k"), "left")
+      .select((col("k").as(Merge.KeyCol) +: nulls) ++ folded: _*)
+  }
+
+  /** Fail the trigger loudly when `column` holds a ':' — the separator
+    * of the counter tables' `<class>:<rest>` key codec. One `limit(1)`
+    * job over the batch. */
+  def requireKeyCodec(batch: DataFrame, column: String, what: String): Unit =
+    require(batch.filter(col(column).contains(":")).limit(1).count() == 0,
+      s"$what must not contain ':' (key codec)")
+
+  /** Wire a streaming DataFrame into the upsert table through
+    * [[maintain]] (`_seq`, empty-trigger and publish-then-sidecar rules
+    * there). CDC follows the table's `store_edits` config.
+    *
+    * A4 per-batch counters (tsdb.py:335-358 new_submissions/new_comments
+    * tallies): `observe()` rides the existing scan — no extra job — and
+    * surfaces in StreamingQueryProgress.observedMetrics("graft_batch").
+    *
+    * After each publish the sidecars refresh: a streamed store keeps its
+    * file skipping current without operator action. Incremental by
+    * construction (refreshZoneMap/refreshBloom stat only files not yet
+    * covered — the batch's re-pointed buckets), so the per-trigger cost
+    * is one stats pass over the batch's own files, never the table.
     *
     * Trigger choices mirror the reference CLI: `ProcessingTime("30 seconds")`
     * ↔ `--wait 30`, `AvailableNow` ↔ `--once` (timesearch.py:257-264).
@@ -2155,49 +2253,16 @@ object Livestream {
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
       zoneMapCols: Option[Seq[String]] = None,
       bloomCols: Option[Seq[String]] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream
-      // A4 per-batch counters (tsdb.py:335-358 new_submissions/new_comments
-      // tallies): observe() rides the existing scan — no extra job — and
-      // surfaces in StreamingQueryProgress.observedMetrics("graft_batch").
-      .observe("graft_batch",
+    maintain(stream.observe("graft_batch",
         count(lit(1)).as("rows"),
-        approx_count_distinct(col(Merge.KeyCol)).as("distinct_ids"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: the merge materializes the batch twice (table write +
-        // CDC write) — caching scans the source once per trigger, and
-        // keeps the observed metrics counted once (a micro-batch is
-        // bounded by the trigger cap, so the cache is small by contract)
-        val seqd = batch.withColumn("_seq",
-          lit(batchId) * 1000000000L + monotonically_increasing_id()).persist()
-        // no-data micro-batches (noDataMicroBatches, restart replays of
-        // fully-consumed sources) publish no new version: merge returns
-        // false on an empty batch, so its return value is the probe.
-        try {
-          // mergeReplay: a restart's replay self-recovers its own
-          // crashed attempt's orphan claim (the checkpointed sink is
-          // the single intended writer — see the writer contract)
-          if (table.mergeReplay(seqd, "_seq")) {
-            // post-publish sidecar refresh: a streamed store keeps its
-            // file skipping current without operator action. Incremental
-            // by construction (refreshZoneMap stats only files not yet
-            // covered — the batch's re-pointed buckets), so the
-            // per-trigger cost is one stats pass over the batch's own
-            // files, never the table. Refresh AFTER publish: the sidecar
-            // is advisory (uncovered files always read), so a crash
-            // between publish and refresh costs coverage, not answers.
-            zoneMapCols.foreach(table.refreshZoneMap)
-            // same contract for the equality/IN sidecar: incremental
-            // (only the batch's new files aggregate), advisory, post-
-            // publish — a streamed store keeps point-lookup skipping
-            // current too
-            bloomCols.foreach(cs => table.refreshBloom(cs))
-          }
+        approx_count_distinct(col(Merge.KeyCol)).as("distinct_ids")),
+      table, checkpoint, trigger, storeEdits = None)((batch, _) => batch) {
+      published =>
+        if (published) {
+          zoneMapCols.foreach(table.refreshZoneMap)
+          bloomCols.foreach(cs => table.refreshBloom(cs))
         }
-        finally seqd.unpersist()
-      }
+    }
 
   /** T2/T6 rate shaping: newest ≤limit rows per cycle per target — on a
     * file/queue source this is `maxFilesPerTrigger`/`maxOffsetsPerTrigger`;

@@ -100,7 +100,8 @@ object Savepoint {
     Paths.get(root, s"sp=$name")
 
   /** Capture and publish a savepoint over `tables` (and optionally
-    * `_BASIS`-bearing artifact roots — StreamTopK/StreamWindow views —
+    * [[BasisView]] artifact roots — StreamTopK/StreamWindow/StreamSession
+    * views, pinned at their published basis —
     * plus [[StreamAnn]]-style generation-pointer index roots, pinned at
     * their ACTIVE generation so [[StreamAnn.dropGeneration]] refuses
     * them). Pins first, vector last (see the atomicity note above).
@@ -131,10 +132,10 @@ object Savepoint {
       normalize(t.tablePath) -> v
     }.toMap
     val av = artifactRoots.map { r =>
-      val f = Paths.get(r, "_BASIS")
-      require(Files.exists(f), s"savepoint '$name': artifact root $r has " +
-        "no published _BASIS pointer")
-      normalize(r) -> new String(Files.readAllBytes(f)).trim.toLong
+      val b = BasisView.basis(r)
+      require(b >= 0L, s"savepoint '$name': artifact root $r has no " +
+        s"published ${BasisView.PointerFile} pointer")
+      normalize(r) -> b
     }.toMap
     val gv = generationRoots.map { r =>
       val g = StreamAnn.activeGeneration(r).getOrElse(sys.error(

@@ -89,26 +89,16 @@ object StreamAnn {
         col("cid").cast("int").as("cid"),
         col("codes"))
 
-  /** Wire a vector stream (id, vec) into the codes table — the same
-    * batchId-derived `_seq` and empty-batch guard as
-    * [[Livestream.upsertSink]]/[[StreamClusters.assignSink]]; CDC off
-    * (time travel over versions covers audit). */
+  /** Wire a vector stream (id, vec) into the codes table through
+    * [[Livestream.maintain]]; CDC off (time travel over versions covers
+    * audit). */
   def encodeSink(stream: DataFrame, id: String, vec: String,
       coarse: IndexedSeq[IndexedSeq[Double]],
       cbRes: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = encodeRows(batch, id, vec, coarse, cbRes)
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => encodeRows(b, id, vec, coarse, cbRes))(_ => ())
 
   /** TAKEDOWN propagation into the maintained index: hard-remove
     * vectors from the codes table — the purge rewrites only the key

@@ -85,25 +85,15 @@ object StreamClusters {
         col("cid").cast("int").as("cid"),
         col("sim_bp"))
 
-  /** Wire a vector stream (id, vec) into the assignment table — the same
-    * batchId-derived `_seq` and empty-batch guard as
-    * [[Livestream.upsertSink]]/[[StreamIndex.indexSink]]; CDC off (time
-    * travel over versions covers audit). */
+  /** Wire a vector stream (id, vec) into the assignment table through
+    * [[Livestream.maintain]]; CDC off (time travel over versions covers
+    * audit). */
   def assignSink(stream: DataFrame, id: String, vec: String,
       codebook: Seq[Seq[Double]], table: Livestream.UpsertTable,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = assignRows(batch, id, vec, codebook)
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => assignRows(b, id, vec, codebook))(_ => ())
 
   /** The assignment VIEW of the maintained table: (doc, cid, sim_bp) —
     * what the cluster consumers read. `doc` is the string key; numeric-id

@@ -58,28 +58,13 @@ object StreamGraph {
   }
 
   /** Wire a (basket, item) stream into the graph table — the additive
-    * RMW of the sketch sinks; same `_seq`/empty-batch contract. */
+    * [[Livestream.foldCounters]] through [[Livestream.maintain]]. */
   def graphSink(stream: DataFrame, basket: String, item: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = graphDelta(batch, basket, item)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => Livestream.foldCounters(table,
+        graphDelta(b, basket, item)))(_ => ())
 
   /** The EDGE view at a support threshold: (u, v) pairs with maintained
     * count ≥ `minSupport`. */

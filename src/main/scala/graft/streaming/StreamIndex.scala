@@ -81,24 +81,14 @@ object StreamIndex {
         coalesce(col("toks"), typedLit(Map.empty[String, Long])).as("toks"))
   }
 
-  /** Wire a document stream (id, text) into the index table — the same
-    * batchId-derived `_seq` and empty-batch guard as
-    * [[Livestream.upsertSink]]; CDC is off (an index has no edit history
+  /** Wire a document stream (id, text) into the index table through
+    * [[Livestream.maintain]]; CDC is off (an index has no edit history
     * worth archiving — time travel over versions covers audit). */
   def indexSink(stream: DataFrame, id: String, text: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = indexRows(batch, id, text)
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => indexRows(b, id, text))(_ => ())
 
   /** The postings VIEW of the maintained index: (doc, tok, tf) — what
     * [[graft.operators.Search.bm25TopKFromPostings]] and the keyword/

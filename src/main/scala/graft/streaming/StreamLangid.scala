@@ -42,31 +42,16 @@ object StreamLangid {
         lower(hex(encode(col("gram"), "UTF-8")))).as("k"), col("cnt_d"))
 
   /** Wire a labeled document stream into the model table — the additive
-    * read-modify-write of the sketch/model sinks; same `_seq` and
-    * empty-batch contract. */
+    * [[Livestream.foldCounters]] through [[Livestream.maintain]], with
+    * the labels' key codec checked per batch. */
   def langidSink(stream: DataFrame, text: String, label: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bad = batch.filter(col(label).contains(":")).limit(1).count()
-        require(bad == 0, "language labels must not contain ':' (key codec)")
-        val delta = langidDelta(batch, text, label)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false)) {
+      (b, _) =>
+        Livestream.requireKeyCodec(b, label, "language labels")
+        Livestream.foldCounters(table, langidDelta(b, text, label))
+    }(_ => ())
 
   /** The maintained (lang, gram, c) count view — what
     * [[TextAnalysis.trigramProfilesFromCounts]] ranks into serving

@@ -75,24 +75,14 @@ object StreamLsh {
         coalesce(col("_bands"), typedLit(Seq.empty[Long])).as("bands"))
   }
 
-  /** Wire a document stream (id, text) into the LSH-state table — same
-    * batchId-derived `_seq` and empty-batch guard as the sibling sinks;
-    * CDC off. */
+  /** Wire a document stream (id, text) into the LSH-state table through
+    * [[Livestream.maintain]]; CDC off. */
   def lshSink(stream: DataFrame, id: String, text: String,
       table: Livestream.UpsertTable, checkpoint: String,
       n: Int, numHashes: Int = 128, bands: Int = 32,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = lshRows(batch, id, text, n, numHashes, bands)
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => lshRows(b, id, text, n, numHashes, bands))(_ => ())
 
   /** The LSH-state VIEW of the maintained table: (doc, _arr, _bands) —
     * what [[Dedup.minhashLshPairsFromState]] consumes. Shingle-less docs

@@ -58,40 +58,24 @@ object StreamModel {
       outputPartitions = Some(1),
       partitioning = Some(Livestream.keyBucket(nBuckets = nBuckets)))
 
-  /** One micro-batch of documents → the batch's per-bucket count DELTA. */
+  /** One micro-batch of documents → the batch's per-bucket count DELTA,
+    * keyed `k` = bucket. */
   private[graft] def batchDelta(batch: DataFrame, id: String, text: String,
       isTarget: Column): DataFrame =
     Importance.featureCounts(batch, id, text, isTarget)
-      .groupBy("b").agg(
+      .groupBy(col("b").as("k")).agg(
         sum(when(col("is_t"), col("c")).otherwise(0L)).as("tcnt_d"),
         sum(col("c")).as("rcnt_d"))
 
   /** Wire a document stream into the model table: per batch, delta +
-    * current → replacement totals (left join: an unseen bucket starts
-    * from zero). Same batchId-derived `_seq` and empty-batch guard as
-    * the sibling sinks; CDC off. */
+    * current → replacement totals ([[Livestream.foldCounters]] over
+    * both counters, through [[Livestream.maintain]]); CDC off. */
   def modelSink(stream: DataFrame, id: String, text: String,
       isTarget: Column, table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batchDelta(batch, id, text, isTarget)
-        val cur = table.current.select(col(Merge.KeyCol).as("b"),
-          col("tcnt").as("tcnt_0"), col("rcnt").as("rcnt_0"))
-        val rows = delta.join(cur, Seq("b"), "left")
-          .select(col("b").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("tcnt_0"), lit(0L)) + col("tcnt_d")).as("tcnt"),
-            (coalesce(col("rcnt_0"), lit(0L)) + col("rcnt_d")).as("rcnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => Livestream.foldCounters(table,
+        batchDelta(b, id, text, isTarget)))(_ => ())
 
   /** The model VIEW of the maintained table: (b, tcnt, rcnt) — what
     * [[Importance.dsirWeightsFromModel]] serves from. */

@@ -61,20 +61,9 @@ object StreamNb {
     * retraction ([[retract]]): fold a (k, cnt_d) delta into the counter
     * table's current counts and merge-publish. */
   private def applyCounts(table: Livestream.UpsertTable, delta: DataFrame,
-      seqBase: Long): Unit = {
-    val cur = table.current.select(col(Merge.KeyCol).as("k"),
-      col("cnt").as("cnt_0"))
-    val rows = delta.join(cur, Seq("k"), "left")
-      .select(col("k").as(Merge.KeyCol),
-        lit(null).cast("string").as("author"),
-        lit(null).cast("string").as("body"),
-        (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-      .withColumn("_seq",
-        lit(seqBase) * 1000000000L + monotonically_increasing_id())
-      .persist()
-    try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-    finally rows.unpersist()
-  }
+      seqBase: Long): Unit =
+    Livestream.publish(table, Livestream.foldCounters(table, delta), seqBase,
+      storeEdits = Some(false))
 
   /** Batch-shaped ingest: fold one ALREADY-ADMITTED document batch's
     * counts into the model table — the composite-pipeline entry for
@@ -87,22 +76,18 @@ object StreamNb {
     applyCounts(table, nbDelta(docs, id, text, label), seqBase)
 
   /** Wire a labeled document stream into the model table — the additive
-    * read-modify-write of the sketch/model sinks; same `_seq` and
-    * empty-batch contract. */
+    * [[Livestream.foldCounters]] through [[Livestream.maintain]], with
+    * the labels' key codec checked per batch. */
   def nbSink(stream: DataFrame, id: String, text: String, label: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the `t:<class>:<tok>` key splits on ':' — enforce the codec
-        // constraint loudly per batch (the histSink device), not just in
-        // the scaladoc
-        val bad = batch.filter(col(label).contains(":")).limit(1).count()
-        require(bad == 0, s"label values must not contain ':' (key codec)")
-        applyCounts(table, nbDelta(batch, id, text, label), batchId)
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false)) {
+      (b, _) =>
+        // the `t:<class>:<tok>` key splits on ':' — enforced per batch,
+        // not just in the scaladoc
+        Livestream.requireKeyCodec(b, label, "label values")
+        Livestream.foldCounters(table, nbDelta(b, id, text, label))
+    }(_ => ())
 
   /** TAKEDOWN propagation into the COUNTER-type artifact — DECREMENTAL
     * learning: the replace-by-doc fleet purges rows

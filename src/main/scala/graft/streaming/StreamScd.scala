@@ -81,20 +81,19 @@ object StreamScd {
 
   /** Wire a change-log stream (key, ts_sec, tb, attr) into the table:
     * per batch, union the batch's per-key events with the key's current
-    * log, re-sort, re-collapse, replace. */
+    * log, re-sort, re-collapse, replace — through
+    * [[Livestream.maintain]]; CDC off. */
   def scdSink(stream: DataFrame, key: String, tsSec: String, tieBreak: String,
       attr: String, table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false)) {
+      (batch, _) =>
         val delta = batch.groupBy(col(key).cast("string").as(Merge.KeyCol))
           .agg(collect_list(struct(col(tsSec).cast("long").as("ts"),
             col(tieBreak).cast("long").as("tb"),
             col(attr).cast("string").as("attr"))).as("evs_d"))
         val cur = table.current.select(col(Merge.KeyCol), col("evs").as("evs_0"))
-        val rows = delta.join(cur, Seq(Merge.KeyCol), "left")
+        delta.join(cur, Seq(Merge.KeyCol), "left")
           .withColumn("evs", array_sort(concat(
             coalesce(col("evs_0"), expr(
               "CAST(array() AS array<struct<ts: bigint, tb: bigint, attr: string>>)")),
@@ -113,12 +112,7 @@ object StreamScd {
             lit(null).cast("string").as("author"),
             lit(null).cast("string").as("body"),
             col("evs"), col("ivs"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    }(_ => ())
 
   /** The served dimension: (key, version, attr, valid_from, valid_to)
     * exploded from the pre-collapsed intervals — zero serve-time

@@ -70,32 +70,17 @@ object StreamSketch {
   }
 
   /** Wire a document stream into the sketch table: per batch, delta +
-    * current → replacement totals. Same `_seq` / empty-batch contract as
-    * the sibling sinks; CDC off. */
+    * current → replacement totals ([[Livestream.foldCounters]] through
+    * [[Livestream.maintain]]); CDC off. */
   def sketchSink(stream: DataFrame, textCol: String,
       table: Livestream.UpsertTable, checkpoint: String,
       depth: Int, widthHex: Int,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
     require(depth > 0 && depth <= 9 && widthHex > 0 && widthHex <= 8,
       s"depth 1-9 and widthHex 1-8 required: d=$depth w=$widthHex")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = batchDelta(batch, textCol, depth, widthHex)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => Livestream.foldCounters(table,
+        batchDelta(b, textCol, depth, widthHex)))(_ => ())
   }
 
   /** One micro-batch of embeddings → second-moment deltas: keys
@@ -116,30 +101,14 @@ object StreamSketch {
     * totals (the [[sketchSink]] algebra — a negative cell sum is a
     * counter like any other). `q_embed_cov_incremental` gates the
     * maintained table against q_embed_cov's RESCAN oracle verbatim, so
-    * any maintenance leak hash-mismatches. Same `_seq` / empty-batch /
-    * CDC-off contracts as the sibling sinks. */
+    * any maintenance leak hash-mismatches. Through
+    * [[Livestream.maintain]]; CDC off. */
   def momentSink(stream: DataFrame, vec: String, d: Int,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
     require(d >= 1 && d <= 4096, s"implausible dimension: $d")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = momentDelta(batch, vec, d)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => Livestream.foldCounters(table, momentDelta(b, vec, d)))(_ => ())
   }
 
   /** Read maintained moment statistics back into [[graft.operators
@@ -168,32 +137,18 @@ object StreamSketch {
     * per batch, GREATEST(current, delta) — registers max-merge, so the
     * maintained sketch equals a batch rebuild at every version (the
     * other mergeable-sketch class next to [[sketchSink]]'s additive
-    * counters). Same `_seq` / empty-batch / CDC-off contracts. Unlike
+    * counters). Through [[Livestream.maintain]]; CDC off. Unlike
     * the additive sinks, REPLAYING a document is harmless here (max is
     * idempotent) — HLL needs no upstream dedup. */
   def hllSink(stream: DataFrame, groupCol: String, textCol: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bad = batch.filter(col(groupCol).contains(":")).limit(1).count()
-        require(bad == 0, s"group values must not contain ':' (key codec)")
-        val delta = hllDelta(batch, groupCol, textCol)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            greatest(coalesce(col("cnt_0"), lit(0L)), col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false)) {
+      (b, _) =>
+        Livestream.requireKeyCodec(b, groupCol, "group values")
+        Livestream.foldCounters(table, hllDelta(b, groupCol, textCol),
+          greatest(_, _))
+    }(_ => ())
 
   /** The HLL-register VIEW: (g, r, mr) — what
     * [[graft.operators.Sketches.hllEstimate]] serves from. */
@@ -218,31 +173,17 @@ object StreamSketch {
       .select(concat(lit("w:"), col("w").cast("string")).as("k"), col("cnt_d"))
   }
 
-  /** Wire a key stream into Bloom words: per batch, current | delta —
-    * bitwise OR merges are IDEMPOTENT (replay-safe, like the HLL sink)
-    * and the state caps at mBits/64 rows. */
+  /** Wire a key stream into Bloom words through [[Livestream.maintain]]:
+    * per batch, current | delta — bitwise OR merges are IDEMPOTENT
+    * (replay-safe, like the HLL sink) and the state caps at mBits/64
+    * rows. */
   def bloomSink(stream: DataFrame, key: String, mBits: Int, k: Int,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
     require(mBits > 0 && mBits % 64 == 0 && k >= 1)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = bloomDelta(batch, key, mBits, k)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            expr("coalesce(cnt_0, cast(0 as bigint)) | cnt_d").as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => Livestream.foldCounters(table, bloomDelta(b, key, mBits, k),
+        _ bitwiseOR _))(_ => ())
   }
 
   /** The Bloom bitmap VIEW, materialized to the driver array form
@@ -289,30 +230,16 @@ object StreamSketch {
         .as("k"), col("cnt_d"))
 
   /** Wire a (group, value) stream into the histogram table — the
-    * additive RMW of [[sketchSink]], same `_seq`/admission contract. */
+    * additive RMW of [[sketchSink]] through [[Livestream.maintain]], same
+    * admission contract; groups' key codec checked per batch. */
   def histSink(stream: DataFrame, groupCol: String, valueCol: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bad = batch.filter(col(groupCol).contains(":")).limit(1).count()
-        require(bad == 0, s"group values must not contain ':' (key codec)")
-        val delta = histDelta(batch, groupCol, valueCol)
-        val cur = table.current.select(col(Merge.KeyCol).as("k"),
-          col("cnt").as("cnt_0"))
-        val rows = delta.join(cur, Seq("k"), "left")
-          .select(col("k").as(Merge.KeyCol),
-            lit(null).cast("string").as("author"),
-            lit(null).cast("string").as("body"),
-            (coalesce(col("cnt_0"), lit(0L)) + col("cnt_d")).as("cnt"))
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false)) {
+      (b, _) =>
+        Livestream.requireKeyCodec(b, groupCol, "group values")
+        Livestream.foldCounters(table, histDelta(b, groupCol, valueCol))
+    }(_ => ())
 
   /** The histogram VIEW: (g, v, c) — what the histogram devices consume
     * in place of their own corpus aggregation. */

@@ -69,23 +69,13 @@ object StreamTrgm {
         coalesce(col("grams"), typedLit(Seq.empty[String])).as("grams"))
   }
 
-  /** Wire a document stream (id, text) into the trigram table — the
-    * batchId-derived `_seq` and empty-batch guard of
-    * [[Livestream.upsertSink]]; CDC off (derived data). */
+  /** Wire a document stream (id, text) into the trigram table through
+    * [[Livestream.maintain]]; CDC off (derived data). */
   def trgmSink(stream: DataFrame, id: String, text: String,
       table: Livestream.UpsertTable, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = trgmRows(batch, id, text)
-          .withColumn("_seq",
-            lit(batchId) * 1000000000L + monotonically_increasing_id())
-          .persist()
-        try { table.mergeReplay(rows, "_seq", storeEdits = Some(false)); () }
-        finally rows.unpersist()
-      }
+    Livestream.maintain(stream, table, checkpoint, trigger, Some(false))(
+      (b, _) => trgmRows(b, id, text))(_ => ())
 
   /** The (doc_id, g) gram-postings VIEW of the maintained index — what
     * [[Search.substringSearchFromGrams]] consumes. Empty arrays (short

@@ -298,6 +298,18 @@ class AnalyticsSpec extends AnyFunSuite {
       "c -> b -> c" -> 1L))
   }
 
+  test("eventPaths: a null event type fails loudly, naming eventPaths") {
+    import graft.operators.Events
+    val evs = Seq[(Long, Long, Long, String)](
+      (1L, 10L, 1L, "a"), (1L, 20L, 2L, null), (1L, 30L, 3L, "c"))
+      .toDF("user_id", "sec", "eid", "typ")
+    val e = intercept[Exception](Events.eventPaths(evs, "user_id", col("sec"),
+      col("eid"), col("typ"), n = 2, k = 10).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains("eventPaths: null event type"), msgs)
+  }
+
   test("percentileRank: equals the per-row at-or-below definition, ties share ranks") {
     val rnd = new scala.util.Random(3)
     val rows = (1L to 200L).map(i => (s"g${i % 3}", i, rnd.nextInt(20).toLong))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Merge
-import graft.streaming.{Livestream, StreamSketch}
+import graft.streaming.{BasisView, Livestream, StreamSketch}
 
 // comment-shaped rows as a case class for MemoryStream (top-level: Spark
 // cannot build encoders for classes nested inside the suite instance)
@@ -649,13 +649,13 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     table.merge(Seq(c(4, "e", 9)).toDF().withColumn("_seq", lit(0L)),
       "_seq", storeEdits = Some(false))                              // v3
     now += 10000000
-    val b = StreamTopK.basis(root)
+    val b = BasisView.basis(root)
     assert(b === 2L)
     intercept[IllegalArgumentException](
       table.vacuumRetain(1000L, pinned = Seq(b)))
     assert(table.versionAvailable(2L), "refusal must delete nothing")
     StreamTopK.refresh(spark, table, root, "subreddit", "idstr", "score", 2)
-    table.vacuumRetain(1000L, pinned = Seq(StreamTopK.basis(root)))
+    table.vacuumRetain(1000L, pinned = Seq(BasisView.basis(root)))
     assert(!table.versionAvailable(2L) && table.versionAvailable(3L))
     assert(StreamTopK.view(spark, root).count() > 0L)
   }
@@ -964,7 +964,7 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     table.seed(Seq(c(1, "a", 10), c(2, "b", 20), c(3, "d", 5)).toDF()) // v0
     val root = s"$base/view"
     StreamTopK.seedView(table, root, "subreddit", "idstr", "score", 2)
-    assert(StreamTopK.basis(root) === 0L)
+    assert(BasisView.basis(root) === 0L)
     // an erasure act between triggers: purge with eraseHistory runs
     // vacuum(keep = 1), so the recorded basis version 0 is unreadable
     assert(table.purge(Seq("t1_2"), eraseHistory = true) === 1L)
@@ -974,7 +974,7 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     // the documented post-erasure reseed — which also retires the
     // purged row the stale view still served
     StreamTopK.refresh(spark, table, root, "subreddit", "idstr", "score", 2)
-    assert(StreamTopK.basis(root) === table.currentVersion)
+    assert(BasisView.basis(root) === table.currentVersion)
     val served = StreamTopK.view(spark, root).collect()
       .map(_.getString(1)).toSet
     assert(served === Set("t1_1", "t1_3"))
@@ -1019,10 +1019,10 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
       assert(served().exists { case (g, k, _, _) => g == "g1" && k == "t1_4" })
       assert(!served().exists { case (_, k, _, _) => k == "t1_2" })
       // idempotent refresh: basis == current ⇒ nothing republishes
-      val b = StreamTopK.basis(root)
+      val b = BasisView.basis(root)
       StreamTopK.refresh(spark, table, root, "subreddit", "idstr",
         "score", 2)
-      assert(StreamTopK.basis(root) === b)
+      assert(BasisView.basis(root) === b)
       // catch-up across MISSED versions: merge twice outside the sink,
       // then one refresh applies the whole range
       table.merge(Seq(row(6, "g2", 50)).toDF()
@@ -1032,9 +1032,9 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
       StreamTopK.refresh(spark, table, root, "subreddit", "idstr",
         "score", 2)
       assert(served() === rescan())
-      assert(StreamTopK.basis(root) === table.currentVersion)
+      assert(BasisView.basis(root) === table.currentVersion)
       // vacuum keeps the basis view readable
-      StreamTopK.vacuumView(root)
+      BasisView.vacuumView(root)
       assert(served() === rescan())
       // TAKEDOWN through the leaderboard: a purge publishes ordinary
       // CDC deletes, so the next refresh retires the erased leader
@@ -1084,10 +1084,10 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
       q.processAllAvailable()
       assert(served() === rescan())
       // idempotent refresh
-      val b = StreamWindow.basis(root)
+      val b = BasisView.basis(root)
       StreamWindow.refresh(spark, table, root, gs, "textlen", "score",
         20L, 10L)
-      assert(StreamWindow.basis(root) === b)
+      assert(BasisView.basis(root) === b)
       // catch-up across missed versions in one apply
       table.merge(Seq(row(5, "g2", 50)).toDF()
         .withColumn("_seq", lit(0L)), "_seq", storeEdits = Some(false))
@@ -1096,8 +1096,8 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
       StreamWindow.refresh(spark, table, root, gs, "textlen", "score",
         20L, 10L)
       assert(served() === rescan())
-      assert(StreamWindow.basis(root) === table.currentVersion)
-      StreamWindow.vacuumView(root)
+      assert(BasisView.basis(root) === table.currentVersion)
+      BasisView.vacuumView(root)
       assert(served() === rescan())
       // an erasure act between triggers: the basis dies, refresh
       // reseeds (the post-erasure catch-up) and the purged row's
@@ -1455,19 +1455,34 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     assert(rows(NaiveBayes.classifyFromModel(docsDf, "doc_id", "text",
         "lang", StreamNb.tokenCounts(table), StreamNb.classDocs(table))) ===
       rows(NaiveBayes.classify(docsDf, "doc_id", "text", "lang")))
-    // the t:<class>:<tok> codec splits on ':' — a ':' label must fail
-    // LOUDLY per batch (the histSink device), not corrupt the model
-    val mem2 = MemoryStream[LDoc]
-    val table2 = StreamNb.table(spark, tmp("nbbad"), nBuckets = 4)
-    val q2 = StreamNb.nbSink(mem2.toDF(), "doc_id", "text", "lang",
-      table2, tmp("nbbadckp"), Trigger.ProcessingTime(0)).start()
-    mem2.addData(LDoc(1, "ham", "a:b"))
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
+    // the `<class>:<rest>` key codec splits on ':' — a ':' class or
+    // group must fail LOUDLY per batch, not corrupt the counters; every
+    // sink that checks the codec, fed the same bad row
+    import graft.streaming.{StreamLangid, StreamSketch}
+    val checked: Seq[(String, (org.apache.spark.sql.DataFrame,
+        Livestream.UpsertTable, String) => org.apache.spark.sql.streaming
+        .DataStreamWriter[org.apache.spark.sql.Row])] = Seq(
+      "nbSink" -> ((s, t, ckp) => StreamNb.nbSink(s, "doc_id", "text", "lang",
+        t, ckp, Trigger.ProcessingTime(0))),
+      "langidSink" -> ((s, t, ckp) => StreamLangid.langidSink(s, "text",
+        "lang", t, ckp, Trigger.ProcessingTime(0))),
+      "hllSink" -> ((s, t, ckp) => StreamSketch.hllSink(s, "lang", "text", t,
+        ckp, Trigger.ProcessingTime(0))),
+      "histSink" -> ((s, t, ckp) => StreamSketch.histSink(s, "lang", "doc_id",
+        t, ckp, Trigger.ProcessingTime(0))))
+    for ((name, sink) <- checked) {
+      val mem2 = MemoryStream[LDoc]
+      val table2 = StreamSketch.table(spark, tmp("codecbad"), nBuckets = 4)
+      val q2 = sink(mem2.toDF(), table2, tmp("codecbadckp")).start()
+      mem2.addData(LDoc(1, "ham", "a:b"))
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      try assert(ex.getMessage.contains("key codec") ||
+        Option(ex.getCause).exists(_.getMessage.contains("key codec")), name)
+      finally q2.stop()
+      assert(table2.currentVersion === -1L, name)
     }
-    try assert(ex.getMessage.contains("key codec") ||
-      Option(ex.getCause).exists(_.getMessage.contains("key codec")))
-    finally q2.stop()
   }
 
   test("StreamClusters T3/T5: a redelivered batch (same _seq) leaves assignments unchanged") {
@@ -2504,18 +2519,18 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     table.merge(Seq(c(3, "d", 30)).toDF().withColumn("_seq", lit(0L)),
       "_seq", storeEdits = Some(false))                              // v1
     StreamTopK.refresh(spark, table, root, "subreddit", "idstr", "score", 2)
-    assert(StreamTopK.basis(root) === 1L)
+    assert(BasisView.basis(root) === 1L)
     // vacuumView with the savepoint's basis kept: the pinned dir
     // survives and still serves the pinned world (top-2 without the
     // later score-30 arrival; the refreshed view leads with it)
-    StreamTopK.vacuumView(root, keep = Set(sp.basisOf(root)))
+    BasisView.vacuumView(root, keep = Set(sp.basisOf(root)))
     val pinnedView = spark.read.parquet(
       java.nio.file.Paths.get(root, s"v=${sp.basisOf(root)}").toString)
     assert(pinnedView.agg(max("m")).head().getLong(0) === 20L)
     assert(StreamTopK.view(spark, root)
       .agg(max("m")).head().getLong(0) === 30L)
     // without the keep, the superseded pinned dir reclaims
-    StreamTopK.vacuumView(root)
+    BasisView.vacuumView(root)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, s"v=${sp.basisOf(root)}")))
   }
@@ -3034,17 +3049,17 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     assert(viewAll === batchAll)
     // refresh is idempotent at basis == current
     StreamSession.refresh(spark, table, root, "author", "score", 150L)
-    assert(StreamSession.basis(root) === table.currentVersion)
+    assert(BasisView.basis(root) === table.currentVersion)
     // erasure between triggers: the recorded basis vanishes, refresh
     // RESEEDS from the current snapshot (the post-erasure contract)
     table.purge(Seq("t1_5"), eraseHistory = true)
     StreamSession.refresh(spark, table, root, "author", "score", 150L)
     assert(sessions("A") === Seq((0L, 50L, 2L), (300L, 350L, 2L)))
-    assert(StreamSession.basis(root) === table.currentVersion)
+    assert(BasisView.basis(root) === table.currentVersion)
     // vacuumView reclaims superseded view dirs, keeps the basis
-    StreamSession.vacuumView(root)
+    BasisView.vacuumView(root)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root,
-      s"v=${StreamSession.basis(root)}")))
+      s"v=${BasisView.basis(root)}")))
     assert(Sessionize.batch(table.current, "author",
       col("score").cast("long"), 150L).count() === 3L)
   }
@@ -3128,32 +3143,114 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
     assert(table.currentVersion === v)
   }
 
-  test("StreamAnn.encodeSink on a FLAT table: an AvailableNow trigger that encodes no rows publishes nothing") {
-    import graft.streaming.StreamAnn
+  test("maintain sinks on a flat table: an empty trigger moves no version, no basis") {
+    // every sink routed through Livestream.maintain, each on a FLAT
+    // table: after a trigger that publishes, an AvailableNow trigger
+    // that encodes no rows publishes no version, and the view sinks'
+    // basis stays where it was
+    import graft.streaming._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    import org.apache.spark.sql.types.StructType
+    def flat(entity: Merge.Entity, schema: StructType) =
+      new Livestream.UpsertTable(spark, tmp("emptyTrig"), entity,
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+    def facts() = new Livestream.UpsertTable(spark, tmp("emptyTrig"),
+      Merge.comments, Seq.empty[C].toDF())
+    def counters() = flat(StreamSketch.sketchEntity, StreamSketch.sketchSchema)
+    type Sink = (DataFrame, Livestream.UpsertTable, String) => DataStreamWriter[Row]
+    // (name, table, first trigger's rows, an input that encodes NO rows,
+    //  the sink, its view root if it maintains one)
+    final case class Case(name: String, table: Livestream.UpsertTable,
+        rows: DataFrame, nothing: DataFrame, sink: Sink,
+        root: Option[String] = None)
+    def mk(name: String, table: Livestream.UpsertTable, rows: DataFrame,
+        sink: Sink, root: Option[String] = None) =
+      Case(name, table, rows, rows.limit(0), sink, root)
+    val comments = Seq(c(1, "a", 10), c(2, "b", 20)).toDF()
+    val docs = Seq(IxDoc(1, "the quick brown fox jumps"),
+      IxDoc(2, "over the lazy dog again")).toDF()
+    val labeled = Seq(LDoc(1, "ham eggs", "a"), LDoc(2, "spam win", "b")).toDF()
+    val vecs = Seq(VecRow(1, Array(2.0, 0.1)), VecRow(2, Array(0.1, 3.0))).toDF()
     val coarse: IndexedSeq[IndexedSeq[Double]] =
       IndexedSeq(IndexedSeq(1.0, 0.0), IndexedSeq(0.0, 1.0))
     val cbRes: IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
       IndexedSeq(IndexedSeq(IndexedSeq(0.0), IndexedSeq(0.1)),
         IndexedSeq(IndexedSeq(0.0), IndexedSeq(0.1)))
-    val table = new Livestream.UpsertTable(spark, tmp("annFlat"), StreamAnn.annEntity,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StreamAnn.annSchema))
-    val src = tmp("annFlatSrc"); val ckp = tmp("annFlatCkp")
-    def trigger(rows: Seq[VecRow], part: String): Unit = {
-      rows.toDF().write.parquet(s"$src/$part")
-      StreamAnn.encodeSink(
-          spark.readStream.schema(Seq.empty[VecRow].toDF().schema)
-            .option("recursiveFileLookup", "true").parquet(src),
-          "vec_id", "embedding", coarse, cbRes, table, ckp, Trigger.AvailableNow())
-        .start().awaitTermination()
+    val views = Seq("topk", "window", "session").map(n => n -> tmp(n)).toMap
+    val cases = Seq(
+      mk("upsertSink", facts(), comments,
+        (s, t, ckp) => Livestream.upsertSink(s, t, ckp)),
+      mk("indexSink", flat(StreamIndex.indexEntity, StreamIndex.indexSchema),
+        docs, (s, t, ckp) => StreamIndex.indexSink(s, "doc_id", "text", t, ckp)),
+      mk("trgmSink", flat(StreamTrgm.trgmEntity, StreamTrgm.trgmSchema), docs,
+        (s, t, ckp) => StreamTrgm.trgmSink(s, "doc_id", "text", t, ckp)),
+      mk("lshSink", flat(StreamLsh.lshEntity, StreamLsh.lshSchema), docs,
+        (s, t, ckp) => StreamLsh.lshSink(s, "doc_id", "text", t, ckp, n = 2)),
+      // a zero vector has no direction: the trigger has a source row
+      // but encodes none
+      Case("encodeSink", flat(StreamAnn.annEntity, StreamAnn.annSchema), vecs,
+        Seq(VecRow(3, Array(0.0, 0.0))).toDF(),
+        (s, t, ckp) => StreamAnn.encodeSink(s, "vec_id", "embedding", coarse,
+          cbRes, t, ckp)),
+      mk("assignSink",
+        flat(StreamClusters.clusterEntity, StreamClusters.clusterSchema), vecs,
+        (s, t, ckp) => StreamClusters.assignSink(s, "vec_id", "embedding",
+          Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), t, ckp)),
+      mk("scdSink", flat(StreamScd.scdEntity, StreamScd.scdSchema),
+        Seq((1L, 10L, 1L, "x"), (1L, 20L, 2L, "y")).toDF("k", "ts", "tb", "attr"),
+        (s, t, ckp) => StreamScd.scdSink(s, "k", "ts", "tb", "attr", t, ckp)),
+      mk("modelSink", flat(StreamModel.modelEntity, StreamModel.modelSchema),
+        Seq(MDoc(1, "ham eggs", true), MDoc(2, "spam win", false)).toDF(),
+        (s, t, ckp) => StreamModel.modelSink(s, "doc_id", "text", col("is_t"),
+          t, ckp)),
+      mk("nbSink", counters(), labeled,
+        (s, t, ckp) => StreamNb.nbSink(s, "doc_id", "text", "lang", t, ckp)),
+      mk("langidSink", counters(), labeled,
+        (s, t, ckp) => StreamLangid.langidSink(s, "text", "lang", t, ckp)),
+      mk("graphSink", counters(),
+        Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("basket", "item"),
+        (s, t, ckp) => StreamGraph.graphSink(s, "basket", "item", t, ckp)),
+      mk("sketchSink", counters(), docs,
+        (s, t, ckp) => StreamSketch.sketchSink(s, "text", t, ckp, 3, 2)),
+      mk("momentSink", counters(), vecs,
+        (s, t, ckp) => StreamSketch.momentSink(s, "embedding", 2, t, ckp)),
+      mk("hllSink", counters(), labeled,
+        (s, t, ckp) => StreamSketch.hllSink(s, "lang", "text", t, ckp)),
+      mk("bloomSink", counters(), docs,
+        (s, t, ckp) => StreamSketch.bloomSink(s, "doc_id", 1024, 3, t, ckp)),
+      mk("histSink", counters(), labeled,
+        (s, t, ckp) => StreamSketch.histSink(s, "lang", "doc_id", t, ckp)),
+      mk("leaderboardSink", facts(), comments,
+        (s, t, ckp) => StreamTopK.leaderboardSink(s, t, views("topk"),
+          "subreddit", "idstr", "score", 2, ckp), Some(views("topk"))),
+      mk("windowSink", facts(), comments,
+        (s, t, ckp) => StreamWindow.windowSink(s, t, views("window"),
+          Seq("subreddit"), "textlen", "score", 20L, 10L, ckp),
+        Some(views("window"))),
+      mk("sessionSink", facts(), comments,
+        (s, t, ckp) => StreamSession.sessionSink(s, t, views("session"),
+          "author", "score", 150L, ckp), Some(views("session"))))
+    for (k <- cases) {
+      val src = tmp("emptyTrigSrc"); val ckp = tmp("emptyTrigCkp")
+      def trigger(rows: DataFrame, part: String) = {
+        rows.write.parquet(s"$src/$part")
+        val q = k.sink(spark.readStream.schema(k.rows.schema)
+            .option("recursiveFileLookup", "true").parquet(src), k.table, ckp)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q
+      }
+      trigger(k.rows, "a")
+      assert(k.table.currentVersion === 0L, k.name)
+      val basis = k.root.map(BasisView.basis)
+      assert(basis.forall(_ === 0L), k.name)
+      val q = trigger(k.nothing, "b")
+      // the trigger ran: one micro-batch over the new input
+      assert(q.recentProgress.exists(_.batchId == 1L), k.name)
+      assert(k.table.currentVersion === 0L, s"${k.name} published on an empty trigger")
+      assert(k.root.map(BasisView.basis) === basis, k.name)
     }
-    trigger(Seq(VecRow(1, Array(2.0, 0.1))), "a")
-    assert(table.currentVersion === 0L)
-    // a zero vector has no direction: the trigger has a source row but
-    // encodes none — the flat table must not be rewritten as a version
-    trigger(Seq(VecRow(2, Array(0.0, 0.0))), "b")
-    assert(table.currentVersion === 0L)
-    assert(StreamAnn.codes(table).count() === 1)
   }
 
   test("a seeded duplicate key fails later merges, naming table and key; purgeKeys repairs it") {
