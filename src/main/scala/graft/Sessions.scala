@@ -11,6 +11,35 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** The engine's `file:` filesystem, bound for both Hadoop entry
+    * points: `fs.file.impl` (FileSystem: every table, log and publish
+    * write) and `fs.AbstractFileSystem.file.impl` (FileContext: the
+    * streaming checkpoints' offset, commit and source logs).
+    *
+    * Why: Hadoop 3.4.2's `RawLocalFileSystem` without libhadoop (the
+    * case on a stock Spark distribution) starts a `chmod` process for
+    * every file and directory it creates and a `readlink` process for
+    * every link-status probe of a checkpoint-log rename. On the
+    * archive-verb benchmark's livestream (seed 2, one 12 s run, JFR
+    * `jdk.ProcessStart`) that was 900 `chmod` and 176 `readlink`
+    * processes, about 100 per poll-publish cycle: 750 `chmod` in the
+    * publish's write tasks, 168 `readlink` and 46 `chmod` on the stream
+    * thread, the rest in job setup and commit. One spawn from a JVM
+    * with a pre-touched 1 GB heap costs ~3 ms alone and ~8 ms with four
+    * threads spawning at once, against ~0.1 ms for the in-process call.
+    * [[graft.sources.ForkFreeRawLocalFileSystem]] makes the same system
+    * calls in-process; files, mode bits and `.crc` checksums are
+    * unchanged.
+    *
+    * The binding must be in the Hadoop configuration before the first
+    * `file:` FileSystem of the JVM is created: FileSystem caches one
+    * instance per scheme, whatever the configuration of later calls. */
+  val LocalFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.sources.ForkFreeLocalFs].getName)
+
   /** @param shufflePartitions cores-proportional locally; on a cluster
     *        size to 2-3× total executor cores and let AQE coalesce. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -37,6 +66,7 @@ object Sessions {
       // than raising shuffle partitions reactively
       .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs)
 
   /** Local gate session (Verify/Bench): worker threads from the env. */
   def local(): SparkSession = {

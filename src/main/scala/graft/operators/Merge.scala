@@ -101,6 +101,11 @@ object Merge {
     *                 partitioning, so the ONE exchange both feeds the
     *                 fold AND leaves the output aligned for a partitioned
     *                 write — no second per-publish exchange.
+    * @param clusterSlots with `clusterCol`: the exchange's explicit task
+    *                 count k and each row's task, an int column in
+    *                 [0, k) that is constant per cluster value (so each
+    *                 cluster value stays in one task). None = hash the
+    *                 cluster column over the shuffle partitions.
     * @param name     the table `existing` was read from, for errors.
     * @throws IllegalStateException (as the job's cause) when a key run
     *         carries more than one existing row: the store holds at most
@@ -115,6 +120,7 @@ object Merge {
       nowEpoch: Column = unix_timestamp(current_timestamp()),
       storeEdits: Boolean = true,
       clusterCol: Option[String] = None,
+      clusterSlots: Option[(Int, Column)] = None,
       name: String = "existing"): MergeResult = {
 
     val hasEdited = incoming.columns.contains("_edited")
@@ -129,8 +135,11 @@ object Merge {
     val unioned = ex.select((cols.map(col) :+ col("_edited") :+ col("_seq")): _*)
       .unionByName(in.select((cols.map(col) :+ col("_edited") :+ col("_seq")): _*))
     val runKey = clusterCol.toSeq :+ KeyCol
-    val sorted = unioned
-      .repartition(col(clusterCol.getOrElse(KeyCol)))
+    val exchanged = clusterSlots match {
+      case Some((k, slot)) => unioned.repartitionById(k, slot)
+      case None => unioned.repartition(col(clusterCol.getOrElse(KeyCol)))
+    }
+    val sorted = exchanged
       .sortWithinPartitions((runKey :+ "_seq").map(col): _*)
 
     val stagedSchema = StructType(existing.schema.map(_.copy(nullable = true)))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.operators.Merge
 
@@ -520,18 +521,49 @@ object Livestream {
     private def ptCol(e: Column): Column =
       coalesce(e.cast("string"), lit("_null_"))
 
-    /** Write-task alignment for a partitioned publish: hash-repartition on
-      * pt puts each bucket in exactly one task (one file per touched
-      * leaf); with outputPartitions = n > 1 a deterministic key salt
-      * spreads each bucket over ≤ n tasks/files for intra-bucket write
+    /** Write-task alignment for a partitioned publish: each bucket in
+      * exactly one task (one file per touched leaf, [[oneTaskPerBucket]]);
+      * with outputPartitions = n > 1 a deterministic key salt spreads
+      * each bucket over ≤ n tasks/files for intra-bucket write
       * parallelism. Either way the file count is a per-bucket contract,
       * never tasks×buckets (the coalesce+partitionBy fan-out shape). */
     private def alignToBuckets(df: DataFrame): DataFrame =
       outputPartitions.filter(_ > 1) match {
         case Some(n) => df.repartition(col(PartCol),
           pmod(xxhash64(col(Merge.KeyCol)), lit(n.toLong)))
-        case None => df.repartition(col(PartCol))
+        case None => oneTaskPerBucket(df)
       }
+
+    private def shufflePartitions: Int =
+      spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+    /** Each bucket of `df` (its `pt` column) in exactly one write task.
+      * An integral partition value ([[Livestream.keyBucket]]) goes to
+      * task value mod k, k = the shuffle partitions: consecutive buckets
+      * land in different tasks, and the explicit count keeps AQE from
+      * coalescing the write into one task. Any other partition value is
+      * hashed over the shuffle partitions. */
+    private def oneTaskPerBucket(df: DataFrame): DataFrame =
+      if (integralPartitions) {
+        val k = shufflePartitions
+        df.repartitionById(k, coalesce(
+          pmod(col(PartCol).try_cast(LongType), lit(k.toLong)), lit(0L)).cast(IntegerType))
+      } else df.repartition(col(PartCol))
+
+    private lazy val integralPartitions: Boolean = partitioning.exists(p =>
+      emptyLike.select(p).schema.head.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      })
+
+    /** [[Merge.upsert]]'s `clusterSlots` for a merge touching the
+      * partition values `sorted`: value i goes to task i mod k,
+      * k = min(|sorted|, shuffle partitions). */
+    private def rankSlots(sorted: Seq[String]): (Int, Column) = {
+      val k = math.min(sorted.size, shufflePartitions)
+      val ranks = typedLit(sorted.zipWithIndex.map { case (v, i) => v -> i % k }.toMap)
+      (k, coalesce(element_at(ranks, col(PartCol)), lit(0)))
+    }
 
     /** The manifest of a version: live partition value → version that last
       * rewrote it. Values are stored path-escaped (one `v<TAB>pt` line per
@@ -1697,9 +1729,9 @@ object Livestream {
           // collect_set, not distinct().collect(): one partial-agg stage
           // into a single reduce task instead of a full shuffle — the set
           // is bounded by |partitions| either way.
-          val touched = b.select(ptCol(pexpr).as(PartCol))
-            .agg(collect_set(col(PartCol))).head().getSeq[String](0)
-            .map(ExternalCatalogUtils.escapePathName).toSet
+          val touchedValues = b.select(ptCol(pexpr).as(PartCol))
+            .agg(collect_set(col(PartCol))).head().getSeq[String](0).sorted
+          val touched = touchedValues.map(ExternalCatalogUtils.escapePathName).toSet
           if (touched.isEmpty) return false  // empty batch: nothing to publish
           val prev = manifest(currentVersion)
           // Pruned read: only the partitions this batch touches — at
@@ -1717,13 +1749,19 @@ object Livestream {
           // exchange per publish disappears. The salted multi-file form
           // (outputPartitions > 1) keeps the post-merge alignment: its
           // (pt, salt) distribution cannot ride the fold's clustering.
+          // The exchange deals the touched buckets round-robin by rank
+          // over k = min(|touched|, shuffle partitions) tasks: each bucket
+          // stays in one task (one file per touched bucket), and every
+          // task gets ⌊|touched|/k⌋ or ⌈|touched|/k⌉ of them (a hash of
+          // the pt strings can put half the buckets on one task).
           val fused = outputPartitions.forall(_ <= 1)
           val r =
             if (fused) Merge.upsert(
               existing.withColumn(PartCol, ptCol(pexpr)),
               b.withColumn(PartCol, ptCol(pexpr)),
               entity.copy(frozen = entity.frozen :+ PartCol), seqCol,
-              storeEdits = cdc, clusterCol = Some(PartCol), name = label)
+              storeEdits = cdc, clusterCol = Some(PartCol),
+              clusterSlots = Some(rankSlots(touchedValues)), name = label)
             else Merge.upsert(existing, b, entity, seqCol, storeEdits = cdc,
               name = label)
           // Same two-consumer staging as the flat branch, bounded here by
@@ -1923,7 +1961,7 @@ object Livestream {
             .parquet(oversized.toSeq.map { case (pt, v) => leaf(v, pt).toString }: _*)
             .drop("v"), dvAt(currentVersion))
           val aligned =
-            if (maxFiles == 1) src.repartition(col(PartCol))
+            if (maxFiles == 1) oneTaskPerBucket(src)
             else src.repartition(col(PartCol),
               pmod(xxhash64(col(Merge.KeyCol)), lit(maxFiles.toLong)))
           committing(next) {

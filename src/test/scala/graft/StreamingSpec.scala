@@ -3285,4 +3285,37 @@ test("StreamSketch Bloom: maintained OR-merge words equal the batch bitmap; repl
         s"partitioning $part")
     }
   }
+
+  test("keyBucket publishes spread whole buckets evenly over the write tasks: seed and merge") {
+    import scala.jdk.CollectionConverters._
+    val nB = 16
+    val k = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val dir = tmp("balance")
+    val table = new Livestream.UpsertTable(spark, dir, Merge.comments,
+      Seq.empty[C].toDF(), partitioning = Some(Livestream.keyBucket(nBuckets = nB)))
+    // the write task of each bucket a version wrote, from its one file's
+    // part-NNNNN number; then the bucket count of every task that wrote
+    def bucketsPerTask(v: Long): Seq[Int] = {
+      val task = table.manifest(v).collect { case (pt, w) if w == v =>
+        val s = Files.list(java.nio.file.Paths.get(dir, s"v=$v", s"pt=$pt"))
+        val files = try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toList finally s.close()
+        assert(files.size === 1, s"bucket $pt of v$v")   // one file per bucket
+        pt -> files.head.stripPrefix("part-").take(5).toInt
+      }
+      task.values.groupBy(identity).values.map(_.size).toSeq.sorted
+    }
+    val keys = (1L to 320L)
+    table.seed(keys.map(i => c(i, s"b$i", i)).toDF())
+    assert(bucketsPerTask(0L) === Seq.fill(k)(nB / k))
+    def merge(ids: Seq[Long]): Unit = table.merge(ids.map(i => c(i, s"e$i", i + 1)).toDF()
+      .withColumn("_seq", lit(0L)), "_seq", storeEdits = Some(false))
+    merge(keys.filter(_ % 3 == 0))                                   // every bucket
+    assert(bucketsPerTask(1L) === Seq.fill(k)(nB / k))
+    // k buckets that share one residue mod k: one bucket per task
+    val sameResidue = keys.filter(i => Livestream.keyBucketValue(s"t1_$i", nB) % k == 1)
+    merge(sameResidue)
+    assert(bucketsPerTask(2L) === Seq.fill(k)(1))
+    assert(table.current.count() === keys.size.toLong)
+  }
 }

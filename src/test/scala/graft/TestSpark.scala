@@ -10,6 +10,7 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(Sessions.LocalFs)
     .getOrCreate()
 
   def fixture(name: String): String =
